@@ -10,6 +10,18 @@ import graft.serde._
   * `Expression` without touching private Column constructors). */
 object GraftFunctions {
 
+  /** The value of a builder's string-literal argument `arg` of `fn`; the
+    * error names the actual problem (not a literal, or a null literal). */
+  private def stringLiteral(fn: String, arg: String,
+                            e: org.apache.spark.sql.catalyst.expressions.Expression): String =
+    e match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(null, _) =>
+        throw new IllegalArgumentException(s"$fn: $arg literal must not be null")
+      case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be a literal, got ${other.sql}")
+    }
+
   /** Idempotently register graft's native functions on a session. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -59,15 +71,16 @@ object GraftFunctions {
       registry.createOrReplaceTempFunction("punct_count",
         e => graft.plans.TextFeatureCounts.PunctCount(e(0)), "built-in")
       registry.createOrReplaceTempFunction("marker_count", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
+        case Seq(child, words) =>
           graft.plans.TextFeatureCounts.MarkerCount(child,
-            w.toString.split('|').toSeq)
+            stringLiteral("marker_count", "words", words).split('|').toSeq)
         case e => throw new IllegalArgumentException(
           s"marker_count expects (text, words literal), got ${e.size} args")
       }, "built-in")
       registry.createOrReplaceTempFunction("ascii_count", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
-          graft.plans.TextFeatureCounts.AsciiCount(child, w.toString)
+        case Seq(child, chars) =>
+          graft.plans.TextFeatureCounts.AsciiCount(child,
+            stringLiteral("ascii_count", "chars", chars))
         case e => throw new IllegalArgumentException(
           s"ascii_count expects (text, chars literal), got ${e.size} args")
       }, "built-in")

@@ -17,8 +17,11 @@ import graft.streaming.DepositStreams.BalanceRow
   *
   *  - `POST /deposit` `{"wallet_id": w, "amount": a}` — reject
   *    `amount <= 0` with 422 (service.go:87-91), otherwise feed the deposit
-  *    stream and ACK only after the micro-batch commits (the analog of the
-  *    blocking `EmitSync`, service.go:99). Test hook: an optional
+  *    stream and ACK only after the micro-batch holding it commits (the
+  *    analog of the blocking `EmitSync`, service.go:99). Concurrent POSTs
+  *    GROUP COMMIT: the admitted requests waiting on the write path share
+  *    one log fsync and one micro-batch per view, so the fixed per-batch
+  *    cost is paid per group, not per deposit. Test hook: an optional
   *    `ts_unix` field pins processing time (the reference stamps wall
   *    clock, detector.go:57).
   *  - `GET /check/{wallet_id}` — balance ⟕ flag with unknown-wallet →
@@ -123,9 +126,14 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     // REPLACE (not the default REPORT) on malformed bytes: a tear inside
     // a multi-byte UTF-8 character must reach the per-LINE torn-tail
     // handler as a garbled final line, not crash the read itself. Whole
-    // mid-file lines are complete (one flush per append), so REPLACE can
-    // only fire on the torn tail — or on real corruption, which then
-    // fails the JSON parse loudly below.
+    // mid-file lines are complete (a group's lines go out in one write
+    // and one flush, and the next group starts only after it), so REPLACE
+    // can only fire on the torn tail — or on real corruption, which then
+    // fails the JSON parse loudly below. A crash mid-group tears at most
+    // the group's FINAL line; the complete lines before it belong to
+    // members that were never ACKed (the ACK follows the whole group's
+    // commit) and replay at-least-once, exactly like a crash between a
+    // single append and its ACK.
     val codec = scala.io.Codec.UTF8
       .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
       .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
@@ -203,39 +211,58 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   private val logWriter = logStream.map(s =>
     new java.io.OutputStreamWriter(s, StandardCharsets.UTF_8))
 
-  private def appendToLog(d: TimedDeposit, idem: Option[String]): Unit =
+  /** Appends one group's fresh deposits and makes them durable: one
+    * write, one flush to the OS buffers and one `getFD.sync()` to stable
+    * storage for the whole group — the ACKs that follow hold across
+    * process AND OS/power failure (the full EmitSync contract, not just
+    * the process-crash half). Only the group leader calls it, so appends
+    * never interleave. */
+  private def appendToLog(events: Seq[(TimedDeposit, Option[String])]): Unit =
     logWriter.zip(logStream).foreach { case (w, s) =>
-      val n = mapper.createObjectNode()
-      n.put("wallet_id", d.walletId); n.put("amount", d.amount)
-      n.put("ts_unix", d.tsUnix); n.put("seq", d.seq)
-      idem.foreach(n.put("idem", _))
-      // The dispatcher serializes requests (no executor), but keep the
-      // append atomic anyway. flush() pushes to OS buffers and
-      // getFD.sync() forces the page to stable storage — the ACK below
-      // this point holds across process AND OS/power failure (the full
-      // EmitSync contract, not just the process-crash half).
-      w.synchronized {
-        w.write(mapper.writeValueAsString(n)); w.write("\n"); w.flush()
-        s.getFD.sync()
+      val lines = new StringBuilder
+      events.foreach { case (d, idem) =>
+        val n = mapper.createObjectNode()
+        n.put("wallet_id", d.walletId); n.put("amount", d.amount)
+        n.put("ts_unix", d.tsUnix); n.put("seq", d.seq)
+        idem.foreach(n.put("idem", _))
+        lines.append(mapper.writeValueAsString(n)).append('\n')
       }
+      w.write(lines.toString); w.flush()
+      s.getFD.sync()
     }
 
-  /** Serializes the deposit write path end-to-end (idempotency check →
-    * fsynced append → ingest → commit → ACK). The check-then-add on
-    * [[seenIdem]] is only race-free under this lock. Declared (like
-    * every field the handlers touch) BEFORE `server.start()` below — a
-    * request racing the constructor tail must never observe a null
-    * field through the already-open port. */
-  private val writeLock = new Object
+  /** One admitted POST on the write path. `outcome` is the HTTP answer,
+    * set by the leader that committed the entry's group. */
+  private final class Pending(val wallet: String, val amount: Double,
+                              val ts: Long, val idem: Option[String]) {
+    var outcome: Option[(Int, String)] = None // guarded by writeLock
+  }
 
-  /** Write-admission bound: at most this many pool threads may be inside
-    * (or queued on) the write path at once; excess POSTs are REJECTED
+  /** Guards the group-commit hand-off: [[queued]], [[committing]] and every
+    * [[Pending.outcome]]. It is held only to enqueue, to drain a group and
+    * to publish its outcomes — never through the fsync or the micro-batch
+    * commits, so the members of a finished group answer at once instead of
+    * queueing behind the next group's commit. Declared (like every field
+    * the handlers touch) BEFORE `server.start()` below — a request racing
+    * the constructor tail must never observe a null field through the
+    * already-open port. */
+  private val writeLock = new Object
+  /** Admitted POSTs not yet drained into a group, in arrival order. */
+  private val queued = scala.collection.mutable.ArrayBuffer.empty[Pending]
+  /** True while a leader commits its group: groups commit one at a time
+    * (the reference topic's per-partition ordering), and the check-then-add
+    * on [[seenIdem]] is race-free because only the leader touches it. */
+  private var committing = false
+
+  /** Write-admission bound: at most this many pool threads may be on the
+    * write path at once (queued, leading or waiting for their group's
+    * commit), which also bounds a group's size; excess POSTs are REJECTED
     * with 503 instead of consuming a thread. Without it, 8 concurrent
-    * writers would occupy the whole pool holding/waiting on [[writeLock]]
-    * through multi-hundred-ms commits and GETs would queue behind write
-    * latency again — the regression the pool exists to prevent. 503 +
-    * retry is safe for keyed clients (idempotency) and honest
-    * backpressure for keyless ones (the deposit was NOT accepted). */
+    * writers would occupy the whole pool through multi-hundred-ms commits
+    * and GETs would queue behind write latency again — the regression the
+    * pool exists to prevent. 503 + retry is safe for keyed clients
+    * (idempotency) and honest backpressure for keyless ones (the deposit
+    * was NOT accepted). */
   private val writePermits = new java.util.concurrent.Semaphore(4)
 
   DepositService.ensureNoDelay()
@@ -244,10 +271,10 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   server.createContext("/check/", (ex: HttpExchange) => handleCheck(ex))
   // Reads must not queue behind the write path: GET /check is two
   // lock-free ConcurrentHashMap reads, so a small pool serves them in
-  // parallel while POSTs serialize on [[writeLock]] (one writer at
-  // a time = the reference topic's per-partition ordering; parallel
-  // lock-free reads = its local view), with [[writePermits]] keeping
-  // half the pool free for reads under any write load. Measured under
+  // parallel while POSTs commit one group at a time (groups in order =
+  // the reference topic's per-partition ordering; parallel lock-free
+  // reads = its local view), with [[writePermits]] keeping half the pool
+  // free for reads under any write load. Measured under
   // concurrent load (DepositServiceLoadSpec): with the single-dispatcher
   // default, GET p99 sat BEHIND in-flight micro-batch commits at ~10 s;
   // with the pool it is decoupled from write latency entirely.
@@ -289,47 +316,74 @@ final class DepositService(spark: SparkSession, port: Int = 0,
       }
       val ts = Option(node.get("ts_unix")).map(_.asLong())
         .getOrElse(System.currentTimeMillis() / 1000L)
-      // Idempotent retry: a key we already logged means the deposit is
-      // durable and will reach the views (this boot or the next replay) —
-      // ACK without a second log record or ingest, so a client that
-      // retries on 500/timeout cannot double-count. Keyless POSTs are
-      // documented at-least-once. The whole check→append→ingest→commit
-      // sequence runs under [[writeLock]] (one writer at a time; reads
-      // never take it), which also makes the check-then-add race-free
-      // under the parallel HTTP pool.
       // filterNot(_.isNull): Jackson's NullNode.asText() is the STRING
       // "null" — an explicit {"idem": null} must mean "no key", not a
       // shared key that marks every later null-idem deposit duplicate.
       val idem = Option(node.get("idem")).filterNot(_.isNull)
         .map(_.asText()).filter(_.nonEmpty)
-      val body = writeLock.synchronized {
-        if (idem.exists(seenIdem.contains))
-          s"""{"wallet_id":"$wallet","status":"duplicate"}"""
-        else {
-          val event = TimedDeposit(wallet, amount, ts, seq.incrementAndGet())
-          appendToLog(event, idem) // log-then-absorb: a crash after this replays it
-          input.addData(event)
-          // Mark the key seen only AFTER the engine holds the event:
-          // "seen" must mean "durably logged AND absorbed this boot", or
-          // a retry after a failure between append and addData would be
-          // ACKed as duplicate while the views never ingest it until a
-          // restart (read-your-writes silently broken for that key). A
-          // failure here leaves the key unseen, so the retry re-appends —
-          // the boot replay dedupes on first-occurrence-per-key, keeping
-          // the views exactly-once over an at-least-once log.
-          idem.foreach(seenIdem.add)
-          // EmitSync analog: ack only once the engine has absorbed the
-          // event — and, since the views update inside foreachBatch, once
-          // the serving maps reflect it (read-your-writes for the ACK).
-          collectorQuery.processAllAvailable()
-          detectorQuery.processAllAvailable()
-          s"""{"wallet_id":"$wallet","status":"ok"}"""
+      val entry = new Pending(wallet, amount, ts, idem)
+      // Leader/follower hand-off: wait while another leader commits; once
+      // the entry is answered (its group committed) or no group is in
+      // flight, stop waiting. An entry still unanswered then makes this
+      // thread the leader of every entry queued so far.
+      val group = writeLock.synchronized {
+        queued += entry
+        while (committing && entry.outcome.isEmpty) writeLock.wait()
+        if (entry.outcome.nonEmpty) Vector.empty
+        else { committing = true; val g = queued.toVector; queued.clear(); g }
+      }
+      if (group.nonEmpty) {
+        val outcomes =
+          try commitGroup(group)
+          catch { case _: Throwable => group.map(_ => (500, """{"error":"internal"}""")) }
+        writeLock.synchronized {
+          group.zip(outcomes).foreach { case (p, o) => p.outcome = Some(o) }
+          committing = false
+          writeLock.notifyAll()
         }
       }
-      respond(ex, 200, body)
+      val (code, body) = writeLock.synchronized(entry.outcome.get)
+      respond(ex, code, body)
     } catch {
       case _: Throwable => respond(ex, 500, """{"error":"internal"}""")
     }
+
+  /** Commits one group (leader only) and returns each member's answer.
+    * Idempotent retry: a key already absorbed ([[seenIdem]]) or seen
+    * earlier in this group is durable and will reach the views (this boot
+    * or the next replay) — it answers `duplicate` without a second log
+    * record or ingest, so a client that retries on 500/timeout cannot
+    * double-count. Keyless POSTs are documented at-least-once. A throw
+    * fails the whole group (500 to every member). */
+  private def commitGroup(group: Vector[Pending]): Vector[(Int, String)] = {
+    val groupKeys = scala.collection.mutable.Set.empty[String]
+    val fresh = group.map { p =>
+      if (p.idem.exists(k => seenIdem.contains(k) || !groupKeys.add(k))) None
+      else Some(TimedDeposit(p.wallet, p.amount, p.ts, seq.incrementAndGet()))
+    }
+    val events = group.zip(fresh).collect { case (p, Some(e)) => (e, p.idem) }
+    if (events.nonEmpty) {
+      appendToLog(events) // log-then-absorb: a crash after this replays them
+      input.addData(events.map(_._1))
+      // Mark the keys seen only AFTER the engine holds the events: "seen"
+      // must mean "durably logged AND absorbed this boot", or a retry
+      // after a failure between append and addData would be ACKed as
+      // duplicate while the views never ingest it until a restart
+      // (read-your-writes silently broken for that key). A failure up to
+      // here leaves every key unseen, so the retries re-append — the boot
+      // replay dedupes on first-occurrence-per-key, keeping the views
+      // exactly-once over an at-least-once log.
+      groupKeys.foreach(seenIdem.add)
+      // EmitSync analog: ack only once the engine has absorbed the group
+      // — and, since the views update inside foreachBatch, once the
+      // serving maps reflect it (read-your-writes for every ACK).
+      collectorQuery.processAllAvailable()
+      detectorQuery.processAllAvailable()
+    }
+    group.zip(fresh).map { case (p, e) =>
+      (200, s"""{"wallet_id":"${p.wallet}","status":"${if (e.isEmpty) "duplicate" else "ok"}"}""")
+    }
+  }
 
   /** O8: the point lookup. Two keyed map reads — no scan, no job; the
     * same asymptotics as the reference's `view.Get` (service.go:128-133). */

@@ -89,6 +89,20 @@ class TextFeatureCountsSpec extends AnyFunSuite with SparkSpec {
     (0 to 3).foreach(i => assert(r.isNullAt(i), s"col $i"))
   }
 
+  test("marker_count with a non-literal words argument names the problem") {
+    val e = intercept[IllegalArgumentException] {
+      df.select(call_function("marker_count", col("text"), col("text")))
+    }
+    assert(e.getMessage.contains("words must be a literal"), e.getMessage)
+  }
+
+  test("ascii_count with a null chars literal names the problem, no NPE") {
+    val e = intercept[IllegalArgumentException] {
+      df.select(call_function("ascii_count", col("text"), lit(null)))
+    }
+    assert(e.getMessage.contains("chars literal must not be null"), e.getMessage)
+  }
+
   test("live corpus parity at sf0.001") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val bad = docs.select(

@@ -2,28 +2,33 @@ package graft.service
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.service.DepositServiceSpec.withTempDir
 
 /** The serving edge under SUSTAINED CONCURRENT LOAD — the scenario the
   * reference's chi router lives in: N parallel clients mixing POST
-  * /deposit (each triggering a micro-batch commit before its ACK) and
-  * GET /check (keyed map reads) against one service process, then a
-  * RESTART UNDER LOAD with durability accounting.
+  * /deposit (concurrent POSTs group-commit: each group shares one log
+  * fsync and one micro-batch per view, and every member is ACKed after
+  * that commit) and GET /check (keyed map reads) against one service
+  * process, then a RESTART UNDER LOAD with durability accounting.
   *
   * What is asserted (correctness) and what is measured (latency):
   *  - every ACKed deposit is visible to a subsequent GET (read-your-
   *    writes survives concurrency — the views commit before the ACK);
-  *  - after a restart mid-workload, the rebuilt views account for EVERY
-  *    ACKed deposit exactly once (ACK ⇒ fsynced log ⇒ replay), while
-  *    un-ACKed in-flight requests may simply be absent — at-least-once
-  *    for keyless POSTs, exactly-once per idempotency key;
+  *  - concurrent writers share micro-batches: fewer batches than ACKs;
+  *  - after a restart mid-workload, or a stop while a group is in
+  *    flight, the rebuilt views account for EVERY ACKed deposit exactly
+  *    once (ACK ⇒ fsynced log ⇒ replay), while un-ACKed in-flight
+  *    requests may simply be absent — at-least-once for keyless POSTs,
+  *    exactly-once per idempotency key;
   *  - per-request wall latencies are collected and the p50/p95/p99
-  *    table is printed for PERF.md (the single-dispatcher design
-  *    serializes requests, so tail latency under load ≈ queueing behind
-  *    micro-batch commits — the measured trade of ACK-after-commit).
+  *    table is printed (groups commit one at a time, so tail latency
+  *    under load ≈ waiting out the group in flight plus one's own — the
+  *    measured trade of ACK-after-commit).
   */
 class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
 
@@ -43,115 +48,186 @@ class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
     if (sorted.isEmpty) Double.NaN
     else sorted(math.min(sorted.size - 1, (p * sorted.size).toInt))
 
+  /** Micro-batches per streaming query, counted from progress events. */
+  private final class BatchCounter extends StreamingQueryListener {
+    val batches = new ConcurrentHashMap[java.util.UUID, java.lang.Long]()
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      batches.merge(e.progress.id, 1L, (a, b) => a + b)
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  }
+
   test("concurrent writers+readers: read-your-writes holds, p50/p99 measured") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_load").toString
-    val svc = new DepositService(spark, changelogDir = Some(dir))
-    val port = svc.boundPort
-    val writers = 3; val postsPerWriter = 8
-    val readers = 3; val getsPerReader = 60
-    val postLat = new ConcurrentLinkedQueue[Double]()
-    val getLat = new ConcurrentLinkedQueue[Double]()
-    val acked = new ConcurrentLinkedQueue[(String, Double)]()
-    val failures = new ConcurrentLinkedQueue[String]()
-    val start = new CountDownLatch(1)
+    withTempDir("svc_load") { dir =>
+      val counter = new BatchCounter
+      spark.streams.addListener(counter)
+      val before = spark.streams.active.map(_.id).toSet
+      val svc = new DepositService(spark, changelogDir = Some(dir))
+      val queries = spark.streams.active.filterNot(q => before(q.id)).toSeq
+      val port = svc.boundPort
+      val writers = 3; val postsPerWriter = 8
+      val readers = 3; val getsPerReader = 60
+      val postLat = new ConcurrentLinkedQueue[Double]()
+      val getLat = new ConcurrentLinkedQueue[Double]()
+      val acked = new ConcurrentLinkedQueue[(String, Double)]()
+      val failures = new ConcurrentLinkedQueue[String]()
+      val start = new CountDownLatch(1)
 
-    val writerThreads = (0 until writers).map { w =>
-      new Thread(() => {
-        start.await()
-        (0 until postsPerWriter).foreach { i =>
-          val wallet = s"load-w$w"; val amount = 100.0 + i
-          val t0 = System.nanoTime()
-          val r = post(port,
-            s"""{"wallet_id":"$wallet","amount":$amount,"ts_unix":${1000 + i},"idem":"w$w-$i"}""")
-          postLat.add((System.nanoTime() - t0) / 1e6)
-          if (r.statusCode() == 200) acked.add((wallet, amount))
-          else failures.add(s"POST $wallet#$i -> ${r.statusCode()}")
-        }
-      })
-    }
-    val readerThreads = (0 until readers).map { g =>
-      new Thread(() => {
-        start.await()
-        (0 until getsPerReader).foreach { i =>
-          val t0 = System.nanoTime()
-          val body = check(port, s"load-w${i % writers}")
-          getLat.add((System.nanoTime() - t0) / 1e6)
-          if (!body.contains("balance")) failures.add(s"GET -> $body")
-        }
-      })
-    }
-    (writerThreads ++ readerThreads).foreach(_.start())
-    start.countDown()
-    (writerThreads ++ readerThreads).foreach(_.join(120000))
+      val writerThreads = (0 until writers).map { w =>
+        new Thread(() => {
+          start.await()
+          (0 until postsPerWriter).foreach { i =>
+            val wallet = s"load-w$w"; val amount = 100.0 + i
+            val t0 = System.nanoTime()
+            val r = post(port,
+              s"""{"wallet_id":"$wallet","amount":$amount,"ts_unix":${1000 + i},"idem":"w$w-$i"}""")
+            postLat.add((System.nanoTime() - t0) / 1e6)
+            if (r.statusCode() == 200) acked.add((wallet, amount))
+            else failures.add(s"POST $wallet#$i -> ${r.statusCode()}")
+          }
+        })
+      }
+      val readerThreads = (0 until readers).map { g =>
+        new Thread(() => {
+          start.await()
+          (0 until getsPerReader).foreach { i =>
+            val t0 = System.nanoTime()
+            val body = check(port, s"load-w${i % writers}")
+            getLat.add((System.nanoTime() - t0) / 1e6)
+            if (!body.contains("balance")) failures.add(s"GET -> $body")
+          }
+        })
+      }
+      (writerThreads ++ readerThreads).foreach(_.start())
+      start.countDown()
+      (writerThreads ++ readerThreads).foreach(_.join(120000))
 
-    assert(failures.isEmpty, s"request failures: ${failures.asScala.toList}")
-    assert(acked.size == writers * postsPerWriter)
-    // Read-your-writes after the storm: each wallet's balance equals the
-    // sum of its ACKed amounts (ACK-after-commit ⇒ nothing in flight).
-    val expected = acked.asScala.groupBy(_._1).view.mapValues(_.map(_._2).sum)
-    expected.foreach { case (w, sum) =>
-      assert(check(port, w).contains(s""""balance":$sum"""),
-        s"wallet $w: expected balance $sum, got ${check(port, w)}")
-    }
+      assert(failures.isEmpty, s"request failures: ${failures.asScala.toList}")
+      assert(acked.size == writers * postsPerWriter)
+      // Read-your-writes after the storm: each wallet's balance equals the
+      // sum of its ACKed amounts (ACK-after-commit ⇒ nothing in flight).
+      val expected = acked.asScala.groupBy(_._1).view.mapValues(_.map(_._2).sum)
+      expected.foreach { case (w, sum) =>
+        assert(check(port, w).contains(s""""balance":$sum"""),
+          s"wallet $w: expected balance $sum, got ${check(port, w)}")
+      }
 
-    val pl = postLat.asScala.toVector.sorted
-    val gl = getLat.asScala.toVector.sorted
-    info(f"POST latency ms: p50=${pct(pl, 0.50)}%.1f p95=${pct(pl, 0.95)}%.1f " +
-      f"p99=${pct(pl, 0.99)}%.1f max=${pl.last}%.1f (n=${pl.size})")
-    info(f"GET  latency ms: p50=${pct(gl, 0.50)}%.1f p95=${pct(gl, 0.95)}%.1f " +
-      f"p99=${pct(gl, 0.99)}%.1f max=${gl.last}%.1f (n=${gl.size})")
-    svc.stop()
+      // Group commit: concurrent POSTs share micro-batches. Progress events
+      // reach the listener asynchronously, so first wait until it has seen
+      // every batch each query reports having run.
+      assert(queries.size == 2, s"service queries: $queries")
+      def seen(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+        Option(counter.batches.get(q.id)).fold(0L)(_.longValue)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (queries.exists(q => seen(q) < q.lastProgress.batchId + 1) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      spark.streams.removeListener(counter)
+      val perQuery = queries.map(seen)
+      assert(perQuery.forall(n => n > 0 && n < acked.size),
+        s"micro-batches per query $perQuery for ${acked.size} ACKs")
+      info(s"group commit: ${acked.size} ACKs in ${perQuery.max} micro-batches per query")
+
+      val pl = postLat.asScala.toVector.sorted
+      val gl = getLat.asScala.toVector.sorted
+      info(f"POST latency ms: p50=${pct(pl, 0.50)}%.1f p95=${pct(pl, 0.95)}%.1f " +
+        f"p99=${pct(pl, 0.99)}%.1f max=${pl.last}%.1f (n=${pl.size})")
+      info(f"GET  latency ms: p50=${pct(gl, 0.50)}%.1f p95=${pct(gl, 0.95)}%.1f " +
+        f"p99=${pct(gl, 0.99)}%.1f max=${gl.last}%.1f (n=${gl.size})")
+      svc.stop()
+    }
   }
 
   test("restart under load: every ACKed deposit survives, exactly once per key") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_load_restart").toString
-    val a = new DepositService(spark, changelogDir = Some(dir))
-    val portA = a.boundPort
-    val acked = new ConcurrentLinkedQueue[(String, Double, String)]()
-    val sent = new ConcurrentLinkedQueue[(String, Double, String)]()
-    val stopAt = 6 // writer progress point where the service is killed
-    val progress = new java.util.concurrent.atomic.AtomicInteger(0)
-    val writers = (0 until 2).map { w =>
-      new Thread(() => {
-        (0 until 12).foreach { i =>
-          val wallet = s"rs-w$w"; val amount = 10.0 + i; val key = s"rs-$w-$i"
-          sent.add((wallet, amount, key))
-          try {
-            val r = post(portA,
-              s"""{"wallet_id":"$wallet","amount":$amount,"ts_unix":${2000 + i},"idem":"$key"}""")
-            if (r.statusCode() == 200) acked.add((wallet, amount, key))
-          } catch { case _: Throwable => () } // killed mid-request: un-ACKed
-          progress.incrementAndGet()
-        }
-      })
-    }
-    writers.foreach(_.start())
-    while (progress.get() < stopAt) Thread.sleep(5)
-    a.stop() // restart under load: in-flight requests die un-ACKed
-    writers.foreach(_.join(60000))
+    withTempDir("svc_load_restart") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      val portA = a.boundPort
+      val acked = new ConcurrentLinkedQueue[(String, Double, String)]()
+      val sent = new ConcurrentLinkedQueue[(String, Double, String)]()
+      val stopAt = 6 // writer progress point where the service is killed
+      val progress = new java.util.concurrent.atomic.AtomicInteger(0)
+      val writers = (0 until 2).map { w =>
+        new Thread(() => {
+          (0 until 12).foreach { i =>
+            val wallet = s"rs-w$w"; val amount = 10.0 + i; val key = s"rs-$w-$i"
+            sent.add((wallet, amount, key))
+            try {
+              val r = post(portA,
+                s"""{"wallet_id":"$wallet","amount":$amount,"ts_unix":${2000 + i},"idem":"$key"}""")
+              if (r.statusCode() == 200) acked.add((wallet, amount, key))
+            } catch { case _: Throwable => () } // killed mid-request: un-ACKed
+            progress.incrementAndGet()
+          }
+        })
+      }
+      writers.foreach(_.start())
+      while (progress.get() < stopAt) Thread.sleep(5)
+      a.stop() // restart under load: in-flight requests die un-ACKed
+      writers.foreach(_.join(60000))
 
-    val b = new DepositService(spark, changelogDir = Some(dir))
-    try {
-      val portB = b.boundPort
-      // 1. Every ACKed deposit is in the rebuilt balance (durability).
-      // 2. RETRYING every sent deposit against the new process must not
-      //    double-count the ACKed ones (idempotency keys survive the
-      //    restart via replay) — afterwards each wallet's balance is
-      //    EXACTLY the sum over its distinct keys.
-      sent.asScala.foreach { case (w, amt, key) =>
-        val r = post(portB,
-          s"""{"wallet_id":"$w","amount":$amt,"ts_unix":2500,"idem":"$key"}""")
-        assert(r.statusCode() == 200)
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        val portB = b.boundPort
+        // 1. Every ACKed deposit is in the rebuilt balance (durability).
+        // 2. RETRYING every sent deposit against the new process must not
+        //    double-count the ACKed ones (idempotency keys survive the
+        //    restart via replay) — afterwards each wallet's balance is
+        //    EXACTLY the sum over its distinct keys.
+        sent.asScala.foreach { case (w, amt, key) =>
+          val r = post(portB,
+            s"""{"wallet_id":"$w","amount":$amt,"ts_unix":2500,"idem":"$key"}""")
+          assert(r.statusCode() == 200)
+        }
+        val perWallet = sent.asScala.toVector.distinct.groupBy(_._1)
+          .view.mapValues(_.map(_._2).sum)
+        perWallet.foreach { case (w, sum) =>
+          assert(check(portB, w).contains(s""""balance":$sum"""),
+            s"wallet $w: expected $sum after replay+retry, got ${check(portB, w)}")
+        }
+        val ackedSet = acked.asScala.map(_._3).toSet
+        info(s"restart under load: ${ackedSet.size} ACKed before kill, " +
+          s"${sent.asScala.size - ackedSet.size} retried after; balances exact")
+      } finally b.stop()
+    }
+  }
+
+  test("stop while a group is in flight: no request hangs, un-ACKed " +
+    "members fail, a retry counts each key once") {
+    withTempDir("svc_load_stop") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      val uri = URI.create(s"http://localhost:${a.boundPort}/deposit")
+      // Four keyed POSTs at once (the write-permit bound): one leads the
+      // first group's commit while the others queue for the next.
+      val deps = (0 until 4).map(i => (s"st-$i", 10.0 + i))
+      val calls = deps.map { case (key, amt) =>
+        client.sendAsync(HttpRequest.newBuilder(uri).POST(HttpRequest.BodyPublishers
+          .ofString(s"""{"wallet_id":"st","amount":$amt,"ts_unix":3000,"idem":"$key"}""")).build(),
+          HttpResponse.BodyHandlers.ofString())
       }
-      val perWallet = sent.asScala.toVector.distinct.groupBy(_._1)
-        .view.mapValues(_.map(_._2).sum)
-      perWallet.foreach { case (w, sum) =>
-        assert(check(portB, w).contains(s""""balance":$sum"""),
-          s"wallet $w: expected $sum after replay+retry, got ${check(portB, w)}")
+      Thread.sleep(50)
+      a.stop()
+      // Every request ends (a status or a closed connection), none hangs;
+      // a 200 must be a real ACK, anything else is un-ACKed.
+      val outcomes = calls.map { c =>
+        try Some(c.get(30, java.util.concurrent.TimeUnit.SECONDS))
+        catch { case e: java.util.concurrent.ExecutionException => None }
       }
-      val ackedSet = acked.asScala.map(_._3).toSet
-      info(s"restart under load: ${ackedSet.size} ACKed before kill, " +
-        s"${sent.asScala.size - ackedSet.size} retried after; balances exact")
-    } finally b.stop()
+      outcomes.flatten.filter(_.statusCode() == 200).foreach(r =>
+        assert(r.body().contains("\"ok\""), r.body()))
+      val logged = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(dir, "deposits.jsonl")).size
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        deps.foreach { case (key, amt) =>
+          val r = post(b.boundPort,
+            s"""{"wallet_id":"st","amount":$amt,"ts_unix":3100,"idem":"$key"}""")
+          assert(r.statusCode() == 200, r.body())
+        }
+        assert(check(b.boundPort, "st").contains(s""""balance":${deps.map(_._2).sum}"""),
+          check(b.boundPort, "st"))
+        info(s"stop mid-group: $logged of ${deps.size} logged and " +
+          s"${outcomes.flatten.count(_.statusCode() == 200)} ACKed before the stop; " +
+          "balance exact after retry")
+      } finally b.stop()
+    }
   }
 }

@@ -22,6 +22,19 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
     client.send(HttpRequest.newBuilder(URI.create(s"$base/check/$wallet")).GET().build(),
       HttpResponse.BodyHandlers.ofString()).body()
 
+  private def postOn(s: DepositService, body: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${s.boundPort}/deposit"))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def checkOn(s: DepositService, wallet: String): String =
+    client.send(HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()
+
+  import DepositServiceSpec.withTempDir
+
   test("deposit -> check round trip flags at cumulative >= 10,000") {
     assert(post("""{"wallet_id":"alice","amount":2000,"ts_unix":1000}""").statusCode() == 200)
     assert(post("""{"wallet_id":"alice","amount":9000,"ts_unix":1060}""").statusCode() == 200)
@@ -60,136 +73,143 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("restart rebuilds the serving views from the retained log " +
     "with zero mismatches (service.go:43-53)") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_changelog").toString
-    def checkOn(s: DepositService, wallet: String): String =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
-        HttpResponse.BodyHandlers.ofString()).body()
-    def postOn(s: DepositService, body: String): Int =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/deposit"))
-        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-        HttpResponse.BodyHandlers.ofString()).statusCode()
+    withTempDir("svc_changelog") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      assert(postOn(a, """{"wallet_id":"dave","amount":6000,"ts_unix":1000}""").statusCode() == 200)
+      assert(postOn(a, """{"wallet_id":"dave","amount":5000,"ts_unix":1060}""").statusCode() == 200)
+      assert(postOn(a, """{"wallet_id":"erin","amount":42.5,"ts_unix":2000}""").statusCode() == 200)
+      val before = Seq("dave", "erin").map(w => w -> checkOn(a, w))
+      assert(before.toMap.apply("dave").contains("\"above_threshold\":true"))
+      a.stop()
 
-    val a = new DepositService(spark, changelogDir = Some(dir))
-    assert(postOn(a, """{"wallet_id":"dave","amount":6000,"ts_unix":1000}""") == 200)
-    assert(postOn(a, """{"wallet_id":"dave","amount":5000,"ts_unix":1060}""") == 200)
-    assert(postOn(a, """{"wallet_id":"erin","amount":42.5,"ts_unix":2000}""") == 200)
-    val before = Seq("dave", "erin").map(w => w -> checkOn(a, w))
-    assert(before.toMap.apply("dave").contains("\"above_threshold\":true"))
-    a.stop()
-
-    // A fresh process over the same changelog: every pre-restart answer
-    // must be served identically before any new write arrives.
-    val b = new DepositService(spark, changelogDir = Some(dir))
-    try {
-      before.foreach { case (w, expected) => assert(checkOn(b, w) == expected) }
-      // And the restored STATE keeps accumulating: a post-restart deposit
-      // adds to the replayed balance instead of restarting from zero.
-      assert(postOn(b, """{"wallet_id":"erin","amount":1.5,"ts_unix":2050}""") == 200)
-      assert(checkOn(b, "erin") ==
-        """{"wallet_id":"erin","balance":44.0,"above_threshold":false}""")
-    } finally b.stop()
+      // A fresh process over the same changelog: every pre-restart answer
+      // must be served identically before any new write arrives.
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        before.foreach { case (w, expected) => assert(checkOn(b, w) == expected) }
+        // And the restored STATE keeps accumulating: a post-restart deposit
+        // adds to the replayed balance instead of restarting from zero.
+        assert(postOn(b, """{"wallet_id":"erin","amount":1.5,"ts_unix":2050}""").statusCode() == 200)
+        assert(checkOn(b, "erin") ==
+          """{"wallet_id":"erin","balance":44.0,"above_threshold":false}""")
+      } finally b.stop()
+    }
   }
 
   test("a torn trailing log line (crash mid-append) is skipped at boot, " +
     "truncated, and mid-file corruption still fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_torn").toString
-    val a = new DepositService(spark, changelogDir = Some(dir))
-    def postOn(s: DepositService, body: String): Int =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/deposit"))
-        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-        HttpResponse.BodyHandlers.ofString()).statusCode()
-    def checkOn(s: DepositService, wallet: String): String =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
-        HttpResponse.BodyHandlers.ofString()).body()
-    assert(postOn(a, """{"wallet_id":"fred","amount":70,"ts_unix":1000}""") == 200)
-    a.stop()
-    val log = new java.io.File(dir, "deposits.jsonl")
-    // Simulate the crash: a partial record with no newline at the tail.
-    val w = new java.io.FileWriter(log, true)
-    w.write("""{"wallet_id":"fred","amou"""); w.close()
-    // Boot must succeed, serve the ACKed prefix, and truncate the tear.
-    val b = new DepositService(spark, changelogDir = Some(dir))
-    try {
-      assert(checkOn(b, "fred") ==
-        """{"wallet_id":"fred","balance":70.0,"above_threshold":false}""")
-      val lines = scala.io.Source.fromFile(log).getLines().toVector
-      assert(lines.forall(_.contains("\"seq\"")), s"tear not truncated: $lines")
-    } finally b.stop()
-    // Mid-file damage is ACKed history: the boot must refuse.
-    val src = scala.io.Source.fromFile(log)
-    val kept = try src.getLines().toVector finally src.close()
-    val w2 = new java.io.FileWriter(log, false)
-    w2.write("CORRUPT\n"); kept.foreach { l => w2.write(l); w2.write("\n") }
-    w2.close()
-    val e = intercept[IllegalStateException] {
-      new DepositService(spark, changelogDir = Some(dir))
+    withTempDir("svc_torn") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      assert(postOn(a, """{"wallet_id":"fred","amount":70,"ts_unix":1000}""").statusCode() == 200)
+      a.stop()
+      val log = new java.io.File(dir, "deposits.jsonl")
+      // Simulate the crash: a partial record with no newline at the tail.
+      val w = new java.io.FileWriter(log, true)
+      w.write("""{"wallet_id":"fred","amou"""); w.close()
+      // Boot must succeed, serve the ACKed prefix, and truncate the tear.
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        assert(checkOn(b, "fred") ==
+          """{"wallet_id":"fred","balance":70.0,"above_threshold":false}""")
+        val lines = logLines(log)
+        assert(lines.forall(_.contains("\"seq\"")), s"tear not truncated: $lines")
+      } finally b.stop()
+      // Mid-file damage is ACKed history: the boot must refuse.
+      val kept = logLines(log)
+      val w2 = new java.io.FileWriter(log, false)
+      w2.write("CORRUPT\n"); kept.foreach { l => w2.write(l); w2.write("\n") }
+      w2.close()
+      val e = intercept[IllegalStateException] {
+        new DepositService(spark, changelogDir = Some(dir))
+      }
+      assert(e.getMessage.contains("refusing to boot"))
     }
-    assert(e.getMessage.contains("refusing to boot"))
   }
 
   test("a tear inside a multi-byte UTF-8 character still recovers " +
     "(REPLACE codec reaches the line handler, no MalformedInput crash)") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_torn_utf8").toString
-    val a = new DepositService(spark, changelogDir = Some(dir))
-    def postOn(s: DepositService, body: String): Int =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/deposit"))
-        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-        HttpResponse.BodyHandlers.ofString()).statusCode()
-    def checkOn(s: DepositService, wallet: String): String =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
-        HttpResponse.BodyHandlers.ofString()).body()
-    assert(postOn(a, """{"wallet_id":"hana","amount":55,"ts_unix":1000}""") == 200)
-    a.stop()
-    val log = new java.io.File(dir, "deposits.jsonl")
-    // Simulate a crash mid-append cutting a 2-byte UTF-8 char ("é") in
-    // half: write the torn record's bytes up to the FIRST byte of é.
-    val torn = """{"wallet_id":"ren""".getBytes("UTF-8") :+ 0xC3.toByte
-    val out = new java.io.FileOutputStream(log, true)
-    out.write(torn); out.close()
-    val b = new DepositService(spark, changelogDir = Some(dir))
-    try {
-      assert(checkOn(b, "hana") ==
-        """{"wallet_id":"hana","balance":55.0,"above_threshold":false}""")
-    } finally b.stop()
+    withTempDir("svc_torn_utf8") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      assert(postOn(a, """{"wallet_id":"hana","amount":55,"ts_unix":1000}""").statusCode() == 200)
+      a.stop()
+      val log = new java.io.File(dir, "deposits.jsonl")
+      // Simulate a crash mid-append cutting a 2-byte UTF-8 char ("é") in
+      // half: write the torn record's bytes up to the FIRST byte of é.
+      val torn = """{"wallet_id":"ren""".getBytes("UTF-8") :+ 0xC3.toByte
+      val out = new java.io.FileOutputStream(log, true)
+      out.write(torn); out.close()
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        assert(checkOn(b, "hana") ==
+          """{"wallet_id":"hana","balance":55.0,"above_threshold":false}""")
+      } finally b.stop()
+    }
   }
 
   test("idempotency key: a retried POST neither double-logs nor " +
     "double-counts, in-process and across restart") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_idem").toString
-    def postOn(s: DepositService, body: String): HttpResponse[String] =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/deposit"))
-        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-        HttpResponse.BodyHandlers.ofString())
-    def checkOn(s: DepositService, wallet: String): String =
-      client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
-        HttpResponse.BodyHandlers.ofString()).body()
-    val a = new DepositService(spark, changelogDir = Some(dir))
-    val dep = """{"wallet_id":"gail","amount":30,"ts_unix":1000,"idem":"k-1"}"""
-    assert(postOn(a, dep).statusCode() == 200)
-    val retry = postOn(a, dep)
-    assert(retry.statusCode() == 200 && retry.body().contains("duplicate"))
-    assert(checkOn(a, "gail") ==
-      """{"wallet_id":"gail","balance":30.0,"above_threshold":false}""")
-    a.stop()
-    // The key set survives the restart (rebuilt from the log): the same
-    // retry against the fresh process is still refused as a duplicate.
-    val b = new DepositService(spark, changelogDir = Some(dir))
-    try {
-      assert(postOn(b, dep).body().contains("duplicate"))
-      assert(checkOn(b, "gail") ==
+    withTempDir("svc_idem") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      val dep = """{"wallet_id":"gail","amount":30,"ts_unix":1000,"idem":"k-1"}"""
+      assert(postOn(a, dep).statusCode() == 200)
+      val retry = postOn(a, dep)
+      assert(retry.statusCode() == 200 && retry.body().contains("duplicate"))
+      assert(checkOn(a, "gail") ==
         """{"wallet_id":"gail","balance":30.0,"above_threshold":false}""")
-    } finally b.stop()
+      a.stop()
+      // The key set survives the restart (rebuilt from the log): the same
+      // retry against the fresh process is still refused as a duplicate.
+      val b = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        assert(postOn(b, dep).body().contains("duplicate"))
+        assert(checkOn(b, "gail") ==
+          """{"wallet_id":"gail","balance":30.0,"above_threshold":false}""")
+      } finally b.stop()
+    }
+  }
+
+  test("the same idempotency key sent twice concurrently: one ok, one " +
+    "duplicate, one log line, counted once") {
+    withTempDir("svc_idem_group") { dir =>
+      val a = new DepositService(spark, changelogDir = Some(dir))
+      try {
+        val uri = URI.create(s"http://localhost:${a.boundPort}/deposit")
+        def send(body: String) = client.sendAsync(HttpRequest.newBuilder(uri)
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        // A leader commits an unrelated deposit while both copies queue
+        // behind it, so the pair usually lands in ONE group (the in-group
+        // duplicate); either way exactly one copy may be absorbed.
+        val lead = send("""{"wallet_id":"ivan","amount":1,"ts_unix":1000}""")
+        val dep = """{"wallet_id":"jill","amount":25,"ts_unix":1000,"idem":"k-twice"}"""
+        val pair = Seq(send(dep), send(dep)).map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+        assert(lead.get(60, java.util.concurrent.TimeUnit.SECONDS).statusCode() == 200)
+        assert(pair.forall(_.statusCode() == 200), pair.map(_.body()))
+        assert(pair.map(r => if (r.body().contains("duplicate")) "duplicate" else "ok").sorted ==
+          Seq("duplicate", "ok"), pair.map(_.body()))
+        assert(logLines(new java.io.File(dir, "deposits.jsonl")).count(_.contains("k-twice")) == 1)
+        assert(checkOn(a, "jill") ==
+          """{"wallet_id":"jill","balance":25.0,"above_threshold":false}""")
+      } finally a.stop()
+    }
+  }
+
+  private def logLines(log: java.io.File): Vector[String] = {
+    val src = scala.io.Source.fromFile(log)
+    try src.getLines().toVector finally src.close()
   }
 
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
     finally if (test.name.contains("malformed")) svc.stop()
+}
+
+object DepositServiceSpec {
+  /** Runs `body` on a fresh temp directory and deletes it afterwards,
+    * whatever the outcome. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath)
+    finally graft.operators.Maintenance.deleteRecursively(dir)
+  }
 }
